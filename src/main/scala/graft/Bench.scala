@@ -5,23 +5,28 @@ import org.apache.spark.sql.functions._
 
 /** Benchmark main (driver contract): per-query seconds over
   * SPARK_GRAFT_SF_DIR, plus the headline north-rule metric — spatial-join +
-  * tile-assignment throughput in images/sec — and the two-parallelism
-  * scaling evidence (pinned local[2] vs local[8] JVMs by default as the
-  * sandbox proxy for N vs 4N executors; see BASELINE.md for methodology).
-  * One JSON line on stdout AND in SPARK_GRAFT_BENCH_OUT.
+  * tile-assignment throughput in images/sec over 150k images on every CPU
+  * of the host — and the N→4N scaling evidence: pinned single-purpose JVMs
+  * at the [[scalingPair]] derived from the host's CPU count (1→4 on 4 CPUs,
+  * 8→32 on 32), the single-host proxy for N vs 4N executors (see BASELINE.md
+  * for methodology). One JSON line on stdout AND in SPARK_GRAFT_BENCH_OUT.
   *
-  * Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default 32),
-  * SPARK_GRAFT_BENCH_IMAGES (default 150000), SPARK_GRAFT_SCALE_LO/HI
-  * (default 2/8), SPARK_GRAFT_SCALE_IMAGES/REPS/PAIRS,
-  * SPARK_GRAFT_SCALING=0 to skip the scaling section,
-  * SPARK_GRAFT_BENCH_OUT (default bench_result.json).
+  * Env: SPARK_GRAFT_SF_DIR (directory of the input tables),
+  * SPARK_GRAFT_BENCH_OUT (default bench_result.json), SPARK_GRAFT_SCALING=0
+  * to skip the multi-minute scaling section.
   */
 object Bench {
 
-  private def session(cpus: Int): SparkSession = {
+  /** The one local session factory of the dev mains and the test suite:
+    * `local[cpus]` with `cpus` shuffle partitions, AQE on, UTC session
+    * time, no UI, and the engine's PIP rewrite + SQL functions installed.
+    * [[Main]] builds its own session: under spark-submit the master and
+    * `spark.sql.extensions` come from the submit command.
+    */
+  def session(cpus: Int = Runtime.getRuntime.availableProcessors): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
-      .appName(s"graft-bench-$cpus")
+      .appName(s"graft-$cpus")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
@@ -62,6 +67,32 @@ object Bench {
     (nImages, nt)
   }
 
+  /** JIT/codegen warm-up so the first measured query isn't charged the
+    * whole session bring-up. The 50-doc minhash round exists because the
+    * sweep's first TYPED pipeline (alphabetically q23) otherwise absorbs
+    * ~1.5 s of one-time Dataset-encoder/shuffle/codegen bring-up that no
+    * steady-state job pays per query (measured: q23 single-shot 3.9 s
+    * stone-cold vs 2.0 s after this warm-up vs 1.3 s steady) — the sweep
+    * measures operators, not JVM bring-up.
+    */
+  def warmUp(spark: SparkSession, sfDir: String): Unit =
+    try {
+      spark.read.parquet(s"$sfDir/lineitem.parquet").groupBy("l_returnflag").count().count()
+      spatialTileJob(spark, 500, spark.sparkContext.defaultParallelism)
+      val mini = spark.createDataFrame(List.tabulate(50)(i =>
+        (i.toLong, (0 until 30).map(j => s"w${(i * 31 + j * 7) % 200}").mkString(" "))))
+        .toDF("doc_id", "text")
+      graft.dedup.Dedup.minhashPairs(spark, mini).count()
+      graft.dedup.Dedup.simhashPairs(spark, mini).count()
+    } catch { case e: Throwable => System.err.println(s"[bench] warmup: $e") }
+
+  /** The N→4N scaling pair for a host with `nproc` CPUs: lo = nproc/4,
+    * hi = 4·lo, so the high side never exceeds the host. None below 4 CPUs,
+    * where no 4× pair fits.
+    */
+  def scalingPair(nproc: Int): Option[(Int, Int)] =
+    if (nproc < 4) None else Some((nproc / 4, nproc / 4 * 4))
+
   private def time[A](body: => A): (A, Double) = {
     val t0 = System.nanoTime()
     val a = body
@@ -70,39 +101,18 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Runtime.getRuntime.availableProcessors
     // 150k amortizes the job's fixed costs (polygon build + two broadcast
     // distributions, ~0.7 s) to <15% of the run — the 50k default
     // understated steady-state throughput by ~2x
-    val nImages = sys.env.getOrElse("SPARK_GRAFT_BENCH_IMAGES", "150000").toLong
+    val nImages = 150000L
     val doScaling = sys.env.getOrElse("SPARK_GRAFT_SCALING", "1") != "0"
 
-    var spark = session(cpus)
+    val spark = session(cpus)
+    warmUp(spark, sfDir)
 
-    // JIT/codegen warmup so the first measured query isn't charged the
-    // whole session bring-up. The 50-doc minhash round exists because the
-    // sweep's first TYPED pipeline (alphabetically q23) otherwise absorbs
-    // ~1.5 s of one-time Dataset-encoder/shuffle/codegen bring-up that no
-    // steady-state job pays per query (measured: q23 single-shot 3.9 s
-    // stone-cold vs 2.0 s after this warmup vs 1.3 s steady) — the sweep
-    // measures operators, not JVM bring-up.
-    try {
-      spark.read.parquet(s"$sfDir/lineitem.parquet").groupBy("l_returnflag").count().count()
-      spatialTileJob(spark, 500, cpus)
-      val mini = spark.createDataFrame(List.tabulate(50)(i =>
-        (i.toLong, (0 until 30).map(j => s"w${(i * 31 + j * 7) % 200}").mkString(" "))))
-        .toDF("doc_id", "text")
-      graft.dedup.Dedup.minhashPairs(spark, mini).count()
-      graft.dedup.Dedup.simhashPairs(spark, mini).count()
-    } catch { case e: Throwable => System.err.println(s"[bench] warmup: $e") }
-
-    // per-operator query timings (count() forces full execution);
-    // SPARK_GRAFT_BENCH_ONLY=q82,q90 narrows the sweep (name prefixes) —
-    // a local iteration aid, never set by the driver
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(',').toSeq)
-    val results0 = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
-      .map { case (name, fn) =>
+    // per-operator query timings (count() forces full execution)
+    val results0 = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val (_, sec) = time {
         try fn(spark, sfDir).count()
         catch { case e: Throwable => System.err.println(s"[bench] $name: $e"); -1L }
@@ -113,8 +123,7 @@ object Bench {
     // compile (constant-cost, not scale-relevant); record its steady state
     // alongside so the artifact carries both numbers (methodology note in
     // BASELINE.md)
-    val steady = Seq("q23_minhash_pairs")
-      .filter(n => only.forall(_.exists(n.startsWith))).map { name =>
+    val steady = Seq("q23_minhash_pairs").map { name =>
       val fn = SparkEntry.queries(name)
       val (_, sec) = time {
         try fn(spark, sfDir).count()
@@ -138,8 +147,7 @@ object Bench {
         try src.mkString.split(" ")(0).toDouble finally src.close()
       }
       catch { case _: Throwable => -1.0 }
-    val headlineReps = // floor 1: an empty rep list would crash .min after the sweep
-      sys.env.getOrElse("SPARK_GRAFT_HEADLINE_REPS", "3").toInt.max(1)
+    val headlineReps = 3
     val loadStart = loadAvg()
     var nTiles = 0L
     val headlineRuns = (1 to headlineReps).map { _ =>
@@ -152,8 +160,10 @@ object Bench {
     val loadEnd = loadAvg()
     val headlineSec = headlineRuns.map(_._1).min
     val headlineSpin = math.max(headlineRuns.map(_._2).max, spinEnd)
-    // quiet 32-thread spin on this host (best of repeated calibration
-    // windows, 2026-08 measurements at 1-min load < 5): ~1.75e10 ops/s.
+    // reference: a quiet 32-thread spin measured ~1.75e10 ops/s on a
+    // 32-CPU host (best of repeated calibration windows at 1-min load < 5),
+    // scaled linearly to `cpus`. Calibrated on that host only: elsewhere
+    // the ratio may clamp at 1.0 under any load. Where calibrated,
     // headline_window < 1.0 means even the best rep ran under tenant load
     // — read the throughput as a floor, not the engine's steady state.
     val spinQuietRef = 1.75e10 * cpus / 32.0
@@ -192,20 +202,22 @@ object Bench {
       (total, sec)
     }
 
-    // scaling: same job, same input, local[8] vs local[32]. A larger image
+    // scaling: same job, same input, local[N] vs local[4N]. A larger image
     // count than the headline amortizes fixed costs (session, JIT, polygon
     // build) that would otherwise cap measurable speedup; a small warmup run
     // per session excludes first-query JIT from the steady-state number.
+    val pair = if (doScaling) scalingPair(cpus) else None
+    if (doScaling && pair.isEmpty)
+      System.err.println(s"[bench] scaling skipped: no N→4N pair fits $cpus CPUs")
     var scalingJson = ""
-    if (doScaling) {
-      val nScale = sys.env.getOrElse("SPARK_GRAFT_SCALE_IMAGES",
-        math.max(nImages, 300000L).toString).toLong
-      val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "2").toInt
+    for ((loresCores, hiresCores) <- pair) {
+      val nScale = math.max(nImages, 300000L)
+      val reps = 2
       // Each "cluster size" is a FRESH JVM, pinned with taskset to exactly
       // `cores` CPUs and told so via ActiveProcessorCount, so GC/JIT/pool
       // ergonomics match the core count — the honest sandbox proxy for an
-      // 8-core vs 32-core cluster. (In-JVM affinity flipping leaves
-      // 32-CPU-sized GC thrashing an 8-CPU mask; best-of-N absorbs
+      // N-core vs 4N-core cluster. (In-JVM affinity flipping leaves
+      // host-sized GC thrashing a smaller CPU mask; best-of-N absorbs
       // background tenant noise on the shared host.)
       def timedRun(cores: Int): (Double, Double) = {
         val java = System.getProperty("java.home") + "/bin/java"
@@ -243,21 +255,10 @@ object Bench {
       //  - best PER-PAIR efficiency: the members of an interleaved pair run
       //    under near-identical host conditions, so their ratio is robust
       //    to spikes that hit whole pairs
-      // default pair 2 vs 8 (still N vs 4N): this host's hypervisor steal
-      // GROWS with active vCPUs (measured quiet per-core spin: 2 cores
-      // 0.80e9 ops/s, 8 cores 0.70e9, 16 cores 0.59e9 — no SMT, no cgroup
-      // quota, 2-3%+ steal), so the smallest pair has the best physical
-      // ceiling (~0.86-0.91 at 2→8 vs ~0.80 at 4→16) AND leaves 24 cores
-      // free to absorb the background tenant load (the kernel balances
-      // unpinned work away from the busy pinned sets) — 8-vs-32 uses every
-      // core and the high side absorbs all interference (measured 3x
-      // penalties in load spikes)
-      val loresCores = sys.env.getOrElse("SPARK_GRAFT_SCALE_LO", "2").toInt
-      val hiresCores = sys.env.getOrElse("SPARK_GRAFT_SCALE_HI", "8").toInt
       // 2 interleaved pairs: enough for the per-pair estimator while keeping
       // the whole bench under ~450 s even through a host load spike (a
       // 3-pair run measured 554 s against a 570 s harness timeout)
-      val pairReps = sys.env.getOrElse("SPARK_GRAFT_SCALE_PAIRS", "2").toInt
+      val pairReps = 2
       val runs = (1 to pairReps).map(_ => (timedRun(loresCores), timedRun(hiresCores)))
       val factor = hiresCores.toDouble / loresCores
       val t8 = runs.map(_._1._1).min
@@ -299,7 +300,6 @@ object Bench {
           f""""ceiling_best_pair":$ceilBestPair%.3f,""" +
           f""""host_cpu_ceiling":$ceiling%.3f,"efficiency_vs_ceiling":${math.min(1.0, eff / ceiling)}%.3f,""" +
           f""""pairs":$pairsJson}"""
-      spark = session(cpus)
     }
 
     val qs = results.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")

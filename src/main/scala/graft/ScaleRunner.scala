@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One "cluster" of the scaling experiment: a fresh JVM pinned (by the
   * parent, via taskset) to `cores` CPUs, running the north-rule spatial-join
   * + tile job. Separate JVMs per cluster size keep GC/JIT/thread-pool
@@ -43,14 +41,7 @@ object ScaleRunner {
     // parent takes the max (least-loaded) of the two per side so one spike
     // can no longer fabricate a >1.0 "ceiling" (r1 recorded 1.798)
     val spinBefore = spinThroughput(cores)
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-scale-$cores")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session(cores)
     // the polygon index is a fixed once-per-run build (identical at both
     // cluster sizes); materialize it outside the timed reps so the
     // measured quantity is the throughput that scales — images streamed

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import graft.cell.CellIndex
-import graft.functions.RayCastContains
+import graft.functions.{GraftFunctions, RayCastContains}
 
 /** Catalyst optimizer rule: a point-in-polygon THETA join written
   * declaratively as
@@ -56,7 +56,8 @@ object PipJoinRewrite extends Rule[LogicalPlan] {
       rewritten match {
         case None => j
         case Some((probe, polys, swapped)) =>
-          val cellAlias = Alias(CellOfExpr(rc.lat, rc.lon, Literal(res)), "__graft_cell")()
+          def dbl(e: Expression) = if (e.dataType == DoubleType) e else Cast(e, DoubleType)
+          val cellAlias = Alias(GraftFunctions.cellOfExpr(dbl(rc.lat), dbl(rc.lon), res), "__graft_cell")()
           val probeProj = Project(probe.output :+ cellAlias, probe)
           val coverAttr = AttributeReference("__graft_cover_cell", LongType, nullable = false)()
           val genNode = Generate(
@@ -71,25 +72,6 @@ object PipJoinRewrite extends Rule[LogicalPlan] {
           Project(j.output, Filter(rc, join))
       }
   }
-}
-
-/** cellOf(lat, lon, res) as a Catalyst expression (graft.cell.CellIndex). */
-case class CellOfExpr(lat: Expression, lon: Expression, resE: Expression)
-    extends TernaryExpression with CodegenFallback {
-  override def first: Expression = lat
-  override def second: Expression = lon
-  override def third: Expression = resE
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = false
-  override def prettyName: String = "cell_of"
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val la = lat.eval(input); val lo = lon.eval(input); val r = resE.eval(input)
-    if (la == null || lo == null || r == null) return 0L
-    def d(v: Any): Double = v match { case x: Double => x; case x: Float => x.toDouble; case x: java.lang.Number => x.doubleValue() }
-    CellIndex.cellOf(d(la), d(lo), r.asInstanceOf[Number].intValue())
-  }
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
-    copy(lat = a, lon = b, resE = c)
 }
 
 /** coverCells(rings, res) → array<long> of cells the polygon touches. */

@@ -189,7 +189,7 @@ object TileManifest {
     val changedIds = up.select(col("image_id"))
       .union(del.select(col("image_id"))).distinct()
     val oldSlices = spark.read.parquet(stagedDir)
-      .filter(col("batch").isin(affected.map(Int.box): _*)) // partition prune
+      .filter(col("batch").isin(affected.map(Int.box).toIndexedSeq: _*)) // partition prune
     val newSlices = oldSlices.join(changedIds, Seq("image_id"), "left_anti")
       .unionByName(up)
       .localCheckpoint(true) // delta-sized; severs lineage from stagedDir

@@ -6,13 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
 
 class PipJoinRewriteSpec extends AnyFunSuite {
-  // the suite-shared session may already exist (getOrCreate would silently
-  // drop an extensions config) — install the rule on the live session
-  lazy val spark: SparkSession = {
-    val s = SparkTestSession.spark
-    graft.plans.PipJoinRewrite.install(s)
-    s
-  }
+  // the suite-shared session comes from Bench.session, which installs the rule
+  lazy val spark: SparkSession = SparkTestSession.spark
 
   private def fixtures() = {
     import spark.implicits._

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Evidence for the scale patterns the 100 TB design leans on: salting
   * spreads a hot cell across partitions; bucketing co-locates a join with
-  * no exchange on the bucketed side; AQE is on in bench sessions.
+  * no exchange on the bucketed side; AQE is on in bench sessions. Also
+  * pins the one session factory and the host-derived N→4N scaling pair.
   */
 class ScalePatternsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -112,5 +113,21 @@ class ScalePatternsSpec extends AnyFunSuite {
       assert(aPlan.contains("BroadcastHashJoin"))
       assert(aRows == bRows)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+  }
+
+  test("the session factory sets UTC, cpus shuffle partitions and the PIP rewrite") {
+    // SparkTestSession is Bench.session(4)
+    assert(spark.sparkContext.master == "local[4]")
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(spark.experimental.extraOptimizations.contains(graft.plans.PipJoinRewrite))
+  }
+
+  test("the scaling pair is N→4N from the host CPU count, none below 4 CPUs") {
+    assert(Bench.scalingPair(4).contains((1, 4)))
+    assert(Bench.scalingPair(32).contains((8, 32)))
+    assert(Bench.scalingPair(6).contains((1, 4)))
+    assert(Bench.scalingPair(3).isEmpty)
   }
 }
