@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Benchmark main (driver contract): per-query seconds over
@@ -19,9 +19,9 @@ object Bench {
 
   /** The one local session factory of the dev mains and the test suite:
     * `local[cpus]` with `cpus` shuffle partitions, AQE on, UTC session
-    * time, no UI, and the engine's PIP rewrite + SQL functions installed.
-    * [[Main]] builds its own session: under spark-submit the master and
-    * `spark.sql.extensions` come from the submit command.
+    * time, no UI, and the engine's SQL functions registered. [[Main]]
+    * builds its own session: under spark-submit the master comes from the
+    * submit command.
     */
   def session(cpus: Int = Runtime.getRuntime.availableProcessors): SparkSession = {
     val s = SparkSession.builder()
@@ -33,7 +33,7 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    graft.plans.PipJoinRewrite.install(s)
+    graft.functions.GraftFunctions.register(s)
     s
   }
 

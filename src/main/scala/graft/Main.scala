@@ -61,7 +61,6 @@ object Main {
         val spark = SparkSession.builder()
           .appName("graft-boundary-extract")
           .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.sql.extensions", "graft.plans.GraftExtensions")
           .getOrCreate()
         spark.sparkContext.setLogLevel("WARN")
         val out = c.path.getOrElse(

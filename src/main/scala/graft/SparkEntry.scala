@@ -196,7 +196,7 @@ object SparkEntry {
     * the ×4-scaled fixtures; the lattice/ray-cast chain is identical).
     */
   private def rasterCellsSqlOver(edgesSqlValues: String, tail: String,
-      extraCte: Boolean = false): String =
+      extraCte: Boolean): String =
     s"""WITH ${insideCtes("", edgesSqlValues)}${if (extraCte) "," else ""}
        |$tail""".stripMargin
 
@@ -599,17 +599,13 @@ object SparkEntry {
         .groupBy(col("cell")).agg(count(lit(1)).as("n"))
     }),
 
-    // PIP spatial join — written DECLARATIVELY as the ray-cast theta join so
-    // the PipJoinRewrite optimizer rule (not the hand-built SpatialJoin
-    // plan, which the flagship covers) produces the cell-indexed form under
-    // the oracle; oracle is the BETWEEN form over the same rectangles.
+    // PIP spatial join — the cell-indexed SpatialJoin.assign (cover, cell
+    // equi-join, ray-cast refine) over the rectangles; oracle is the
+    // BETWEEN form over the same rectangles.
     "q12_pip_join" -> ((s, dir) => {
       import s.implicits._
-      graft.plans.PipJoinRewrite.install(s)
-      val polys = s.createDataset(rectPolys).toDF()
-      probePoints(s, dir)
-        .join(polys, GraftFunctions.rayCastContains(col("rings"), col("lat"), col("lon")))
-        .select(col("o_orderkey"), col("relation_id"))
+      SpatialJoin.assign(s, probePoints(s, dir), s.createDataset(rectPolys), res = 7,
+        idCol = "o_orderkey").select(col("o_orderkey"), col("relation_id"))
     }),
 
     // kNN baseline — brute-force top-3 by planar distance, rank by (dist, id)
@@ -760,7 +756,6 @@ object SparkEntry {
     // the window's signed MIN VALUE, so the rightmost-position rule never
     // affects the fingerprint set).
     "q29_fingerprint" -> ((s, dir) => {
-      import s.implicits._
       val fps = table(s, dir, "documents").select(
         col("doc_id").cast("long").as("doc_id"),
         explode(graft.text.TextExpr.winnowCol(s, col("text"))).as("fp"))
@@ -967,7 +962,6 @@ object SparkEntry {
     // scanned once; the eval gram set is benchmark-sized → broadcast
     // semi-join; one distinct + one groupBy exchange for per-doc counts.
     "q67_decontaminate" -> ((s, dir) => {
-      import s.implicits._
       val n = 13
       def grams(df: DataFrame): DataFrame = df
         .select(col("doc_id"),
@@ -1198,7 +1192,6 @@ object SparkEntry {
     // DETERMINISTIC here (splitmix64 probes), so the oracle reproduces the
     // exact same bitset and the exact same verdicts, FPs included.
     "q81_bloom_decontam" -> ((s, dir) => {
-      import s.implicits._
       val n = 13
       def gramKeys(df: DataFrame): DataFrame = df
         .select(col("doc_id"),
@@ -4031,7 +4024,6 @@ object SparkEntry {
     // q40's keeper-selection shape; oracled by extending the recursive-CTE
     // reachability fixpoint with the keeper anti-join.
     "q53_fuzzy_select" -> ((s, dir) => {
-      import s.implicits._
       val docs0 = table(s, dir, "documents").filter(col("doc_id") % 10 === 0)
         .select(col("doc_id"), col("text"))
       def tier(k: Int, suffix: String) = docs0.select(

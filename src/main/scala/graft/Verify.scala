@@ -10,9 +10,8 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').toSet) else None
     def keep(name: String): Boolean = only.forall(_.contains(name))
-    // engine extensions active on the driver-checked path (PIP rewrite rule
-    // + SQL function registration), same as a production session would run;
-    // a fixed local[4], so the dump's partitioning does not vary by host
+    // the factory session with the engine's SQL functions registered; a
+    // fixed local[4], so the dump's partitioning does not vary by host
     val spark = Bench.session(4)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>

@@ -2,11 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.catalyst.expressions.{Add, Cast, Divide, Expression, Floor,
-  Greatest, Least, Literal, Multiply, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.ColumnExprs.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Engine function surface.
@@ -25,22 +23,13 @@ object GraftFunctions {
     *   res*288230376151711744 + least(greatest(floor((lon+180)/360*2^res),0),2^res-1)*536870912
     *     + least(greatest(floor((lat+90)/180*2^res),0),2^res-1)
     */
-  def cellOfCol(lat: Column, lon: Column, res: Int): Column =
-    column(cellOfExpr(expression(lat), expression(lon), res))
-
-  /** [[cellOfCol]] over Catalyst expressions: the one cell arithmetic,
-    * which PipJoinRewrite also builds on its resolved probe side. The
-    * floor→double cast is the one the analyzer would insert, so the tree is
-    * resolved as soon as `lat` and `lon` are resolved doubles.
-    */
-  def cellOfExpr(lat: Expression, lon: Expression, res: Int): Expression = {
-    val n = (1L << res).toDouble
-    def axis(v: Expression, offset: Double, span: Double): Expression = Cast(
-      Least(Seq(Greatest(Seq(
-        Cast(Floor(Multiply(Divide(Add(v, Literal(offset)), Literal(span)), Literal(n))), DoubleType),
-        Literal(0.0))), Literal(n - 1))), LongType)
-    Add(Add(Literal(res.toLong * 288230376151711744L),
-      Multiply(axis(lon, 180.0, 360.0), Literal(536870912L))), axis(lat, 90.0, 180.0))
+  def cellOfCol(lat: Column, lon: Column, res: Int): Column = {
+    val n = 1L << res
+    val x = least(greatest(floor((lon + lit(180.0)) / lit(360.0) * lit(n.toDouble)), lit(0.0)),
+      lit((n - 1).toDouble)).cast("long")
+    val y = least(greatest(floor((lat + lit(90.0)) / lit(180.0) * lit(n.toDouble)), lit(0.0)),
+      lit((n - 1).toDouble)).cast("long")
+    lit(res.toLong * 288230376151711744L) + x * lit(536870912L) + y
   }
 
   /** Deterministic probe geotag from an integer key — FIXTURES.md §2

@@ -1,8 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Multi-source BFS hop distance over an undirected edge list — the
   * graph-geodesic form of region growing: seeded at a polygon set over
@@ -42,8 +41,6 @@ import org.apache.spark.storage.StorageLevel
   * never re-embeds its upstream more than `blockRounds` times.
   */
 object Bfs {
-
-  private val lvl = StorageLevel.MEMORY_AND_DISK
 
   /** Run `body(cur, roundNo)` as lazily-chained rounds with a
     * localCheckpoint + count() at each block boundary; returns the

@@ -23,8 +23,8 @@ import org.apache.spark.sql.types._
   * [[graft.functions.CosineF32]] recipe), with the codebooks decoded once
   * per plan from literal children — not per row, not per element.
   *
-  * FP parity: every loop replicates the driver-side scalar kernels in
-  * [[Similarity]] (`nearestCidOf`/`pqCodesOf`/`pqLutOf`) term by term on
+  * FP parity: every loop replicates the driver-side scalar kernel in
+  * [[Similarity]] (`nearestCidOf`) and the PQ code/LUT math term by term on
   * well-formed vectors — ascending dimension inside a distance, the
   * (d, cid) argmin tie rule, LUT slots of dropped clusters left 0.0 — so
   * scalar-vs-column parity, and therefore every DuckDB oracle
@@ -250,7 +250,7 @@ object QuantKernel {
     new GenericArrayData(out)
   }
 
-  /** `pqCodesOf`: per-subspace argmin over the j·dsub slice. A vector
+  /** PQ codes: per-subspace argmin over the j·dsub slice. A vector
     * whose length ≠ m·dsub returns null — quarantine semantics: the old
     * scalar UDF zero-padded short vectors (Arrays.copyOfRange) and so
     * encoded garbage that then RANKED; a corrupt row must never rank. */
@@ -292,7 +292,7 @@ object QuantKernel {
     new GenericArrayData(codes)
   }
 
-  /** `pqLutOf`: cell (j, ci) = ‖v_j − c_{j,ci}‖², dimension order inside,
+  /** PQ LUT: cell (j, ci) = ‖v_j − c_{j,ci}‖², dimension order inside,
     * codebook order across; unassigned slots stay 0.0. Wrong-dim
     * vectors return null (quarantine — the scalar form threw). */
   def pqLut(cids2: Array[Array[Int]], cvs3: Array[Array[Array[Double]]],

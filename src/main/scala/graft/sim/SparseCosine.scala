@@ -36,7 +36,6 @@ object SparseCosine {
   def similarPairs(spark: SparkSession, docs: DataFrame, num: Long = 8L,
       den: Long = 10L, maxDf: Int = 64, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    import spark.implicits._
     require(num >= 0 && den > 0 && num <= den, s"threshold $num/$den")
     require(maxDf >= 2, s"maxDf=$maxDf")
     // fused codegen'd bigram loop (graft.text.GramExpr) — the

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.img.{Blobs, Codecs, ImageTable}
+import graft.img.{Blobs, ImageTable}
 
 /** Labeling semantics pinned by hand-drawn masks (the cases where CCL
   * implementations disagree), then the planted mask table against its

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.fixtures.OsmScenes
 import graft.osm.BoundaryExtract
-import graft.geom.{PolygonRow, Pt}
+import graft.geom.PolygonRow
 
 /** End-to-end pipeline tests on the golden scenes S1–S7 (FIXTURES.md §1).
   * Expected ring sequences are derived BY HAND from the reference algorithm

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.graph.{Bfs, Centrality, LabelProp}
+import graft.graph.{Bfs, Centrality}
 
 /** Stress centrality against hand-computed closed forms and a sequential
   * brute-force shortest-path enumerator; modularity against the textbook

@@ -1,8 +1,10 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.geom.{PolygonRow, Pt}
 import graft.img.ImageTable
 import graft.tile.{Tiling, TileManifest}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 class ImageTableSpec extends AnyFunSuite {
@@ -48,7 +50,6 @@ class ImageTableSpec extends AnyFunSuite {
 
 class TilingSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
-  import spark.implicits._
 
   test("pyramid levels shrink to a single tile; level0 tiles cover the image") {
     val row = ImageTable.makeRow(5) // some w,h in 16..63
@@ -202,39 +203,58 @@ class SpatialJoinSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  test("cell-indexed join equals brute-force ray cast over all probe/polygon pairs") {
-    val (n, w, r) = graft.fixtures.OsmScenes.grid(6, 4).toDFs(spark)
-    val polys = graft.osm.BoundaryExtract.extract(spark, r, w, n, 8, 8)
-    val polyList = polys.collect()
-    val probes = spark.range(0, 500).select(
-      col("id").as("pid"),
-      graft.functions.GraftFunctions.latOfKey(col("id")).as("lat"),
-      graft.functions.GraftFunctions.lonOfKey(col("id")).as("lon"))
+  private def gridPolys(cols: Int, rows: Int) = {
+    val (n, w, r) = graft.fixtures.OsmScenes.grid(cols, rows).toDFs(spark)
+    graft.osm.BoundaryExtract.extract(spark, r, w, n, 8, 8)
+  }
 
-    val got = graft.join.SpatialJoin.assign(spark, probes, polys, res = 7, idCol = "pid")
+  private def probes(count: Long) = spark.range(0, count).select(
+    col("id").as("pid"),
+    graft.functions.GraftFunctions.latOfKey(col("id")).as("lat"),
+    graft.functions.GraftFunctions.lonOfKey(col("id")).as("lon"))
+
+  private def assigned(probes: DataFrame, polys: Dataset[PolygonRow], res: Int) =
+    graft.join.SpatialJoin.assign(spark, probes, polys, res, idCol = "pid")
       .select("pid", "relation_id").as[(Long, Long)].collect().toSet
 
-    val probeRows = probes.as[(Long, Double, Double)].collect()
-    val want = (for {
-      (pid, la, lo) <- probeRows
+  /** Every (probe, polygon) pair the ray-cast kernel accepts, by brute force. */
+  private def bruteForce(probes: DataFrame, polys: Dataset[PolygonRow]) = {
+    val polyList = polys.collect()
+    (for {
+      (pid, la, lo) <- probes.as[(Long, Double, Double)].collect()
       p <- polyList if graft.geom.Geom.containsPoint(p.rings, la, lo)
     } yield (pid, p.relation_id)).toSet
+  }
 
-    assert(got == want)
+  test("cell-indexed join equals brute-force ray cast over all probe/polygon pairs") {
+    val polys = gridPolys(6, 4)
+    val pts = probes(500)
+    assert(assigned(pts, polys, res = 7) == bruteForce(pts, polys))
+  }
+
+  test("mixed cover resolutions: probes match a world-sized and small polygons alike") {
+    // a diamond spanning most of the globe: its res-7 bbox exceeds the
+    // cover cap, so it covers coarser than the grid rectangles
+    val world = PolygonRow("world", Seq(Seq(
+      Pt(0f, -170f), Pt(80f, 0f), Pt(0f, 170f), Pt(-80f, 0f), Pt(0f, -170f))),
+      relation_id = 999999L, admin_level = 8L)
+    val polys = gridPolys(6, 4).union(Seq(world).toDS())
+    val resolutions = graft.join.SpatialJoin.polygonCells(spark, polys, res = 7)
+      .map(c => (c.cell >>> 58).toInt).distinct().collect().toSet
+    assert(resolutions.size >= 2, s"expected mixed cover resolutions, got $resolutions")
+
+    val pts = probes(500)
+    val want = bruteForce(pts, polys)
+    assert(want.exists(_._2 == world.relation_id) && want.exists(_._2 != world.relation_id))
+    assert(assigned(pts, polys, res = 7) == want)
   }
 
   test("salted shuffle path returns identical assignments") {
-    val (n, w, r) = graft.fixtures.OsmScenes.grid(4, 3).toDFs(spark)
-    val polys = graft.osm.BoundaryExtract.extract(spark, r, w, n, 8, 8)
-    val probes = spark.range(0, 300).select(
-      col("id").as("pid"),
-      graft.functions.GraftFunctions.latOfKey(col("id")).as("lat"),
-      graft.functions.GraftFunctions.lonOfKey(col("id")).as("lon"))
-    val a = graft.join.SpatialJoin.assign(spark, probes, polys, res = 6, idCol = "pid")
-      .select("pid", "relation_id").as[(Long, Long)].collect().toSet
-    val b = graft.join.SpatialJoin.assign(spark, probes, polys, res = 6, idCol = "pid",
+    val polys = gridPolys(4, 3)
+    val pts = probes(300)
+    val b = graft.join.SpatialJoin.assign(spark, pts, polys, res = 6, idCol = "pid",
       useBroadcast = false, saltBuckets = 4)
       .select("pid", "relation_id").as[(Long, Long)].collect().toSet
-    assert(a == b)
+    assert(assigned(pts, polys, res = 6) == b)
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.fixtures.OsmScenes
-import graft.fixtures.OsmScenes.{Member, NodeRow, RelationRow, WayRow}
+import graft.fixtures.OsmScenes.{NodeRow, RelationRow, WayRow}
 import graft.osm.pbf.{OsmPbf, PbfReader, PbfSource, PbfWriter}
 
 class PbfSpec extends AnyFunSuite {

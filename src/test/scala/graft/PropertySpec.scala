@@ -1,6 +1,6 @@
 package graft
 
-import org.scalacheck.{Gen, Properties, Prop}
+import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
 import graft.ring.RingAssembler
 import graft.ring.RingAssembler.SegNode

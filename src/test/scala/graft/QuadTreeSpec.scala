@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 import graft.cell.QuadTree
 
 /** QuadTree.leaves pins: brute-force recursive splitter parity on a

@@ -64,7 +64,6 @@ class ScalePatternsSpec extends AnyFunSuite {
 
   test("bucketed tables join without a shuffle exchange on the bucketed sides") {
     val dir = java.nio.file.Files.createTempDirectory("graft-buckets").toString
-    val wh = spark.conf.getOption("spark.sql.warehouse.dir")
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     val o = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     li.write.mode("overwrite").bucketBy(8, "l_orderkey").sortBy("l_orderkey")
@@ -116,12 +115,16 @@ class ScalePatternsSpec extends AnyFunSuite {
   }
 
   test("the session factory sets UTC, cpus shuffle partitions and the PIP rewrite") {
-    // SparkTestSession is Bench.session(4)
+    // SparkTestSession is Bench.session(4). PIP joins go through
+    // SpatialJoin.assign, so the factory installs no optimizer rewrite; it
+    // registers the engine functions, ray_cast_contains among them.
     assert(spark.sparkContext.master == "local[4]")
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
-    assert(spark.experimental.extraOptimizations.contains(graft.plans.PipJoinRewrite))
+    assert(spark.experimental.extraOptimizations.isEmpty)
+    assert(spark.sessionState.functionRegistry.functionExists(
+      org.apache.spark.sql.catalyst.FunctionIdentifier("ray_cast_contains")))
   }
 
   test("the scaling pair is N→4N from the host CPU count, none below 4 CPUs") {

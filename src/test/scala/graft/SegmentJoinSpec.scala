@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 import graft.geom.SegmentJoin
 
 /** The grid + reference-point plan must equal a brute-force O(n²) pass of
